@@ -723,12 +723,6 @@ def st_area_or_zero(ring: Column) -> Column:
     return F.when(F.size(ring) >= 3, st_area(ring)).otherwise(F.lit(0.0))
 
 
-def st_clip_tri_area_arrow(df, tri_col: str, fans, out_cols):
-    """Single-subject convenience wrapper over
-    :func:`st_clip_tri_fans_area_arrow` — see its docstring."""
-    return st_clip_tri_fans_area_arrow(df, [(tri_col, fans, out_cols)])
-
-
 def st_clip_tri_fans_area_arrow(df, subjects):
     """ARROW BATCH twin of the 3-step ``st_clip_half_plane_cols``
     chain + ``st_area_or_zero`` for TRIANGLE subjects clipped by

@@ -29,6 +29,17 @@ def _default_driver_mem() -> str:
     return "16g"
 
 
+# Entries of Spark's LRU cache of compiled whole-stage-codegen classes
+# (``spark.sql.codegen.cache.maxEntries``, default 100). One pass over
+# all 413 registered queries at sf0.01 compiles 4388 distinct classes;
+# one warm pass of the iterative kernels alone (n1, i48c, k55, k2b)
+# cycles about 130, so under the default every warm build missed on
+# every class and compiled it again. 8192 holds the whole registry with
+# room to grow. A static conf: it takes effect only when ``get_spark``
+# launches the JVM, not on a session that is already running.
+_CODEGEN_CACHE_ENTRIES = 8192
+
+
 def get_spark(app_name: str = "glonassdatamining-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -100,5 +111,16 @@ def get_spark(app_name: str = "glonassdatamining-spark") -> SparkSession:
         # beats DuckDB-divergent silent NULLs in the oracle compare.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
+        # Per-call origin capture OFF. PySpark wraps every DataFrame,
+        # Column and functions call to record its Python call site: a
+        # stack walk plus about 5 py4j round trips per call (active
+        # session, stack-depth conf, origin lookup/set/clear), which
+        # eager builders pay on the driver between their jobs.
+        # Lost: ANSI and analysis errors no longer carry the
+        # "== DataFrame ==" Python call-site section. Kept: the
+        # exception class and the JVM message. PySpark reads the flag
+        # once per process, so it is set here, at session creation.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()

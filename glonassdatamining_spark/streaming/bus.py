@@ -83,22 +83,6 @@ BUS_TOTAL = 1000
 BUS_SCHEMA = "part INT, off BIGINT, msg_id BIGINT, obj_id BIGINT, x DOUBLE, y DOUBLE"
 
 
-def fix_tuple(part: int, off: int, n_parts: int) -> tuple:
-    """The pure (partition, offset) → record function: the log's
-    content, same arithmetic as a17's batch generator. (Driver-side
-    convenience twin of the inlined arithmetic in the reader — the
-    reader can't reference this module, see the pickling note.)"""
-    msg_id = off * n_parts + part
-    return (
-        part,
-        off,
-        msg_id,
-        msg_id % 50,
-        float(msg_id * 7919 % 100000) / 1000.0,
-        float(msg_id * 104729 % 100000) / 1000.0,
-    )
-
-
 def make_bus_source():
     """Build the gnssbus DataSource class (self-contained, pickles by
     value — see the module docstring's pickling note)."""

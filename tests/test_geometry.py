@@ -1155,6 +1155,23 @@ def test_i65b_equals_i65_at_reference_density(spark):
     assert cell_big < cell_small
 
 
+def test_covisit_null_cells_form_no_pair(spark):
+    """The i65/i69 co-visit filter pairs objects that share a cell; a
+    NULL cell is no shared cell (the cell equi-join's semantics), so
+    objects 1 and 2, which meet only in NULL cells, form no pair while
+    3 and 4 still pair through cell 7."""
+    from glonassdatamining_spark.operators.spatiotemporal import (
+        _covisit_shared_pairs,
+    )
+
+    memb = spark.createDataFrame(
+        [(1, None), (2, None), (1, None), (2, None), (3, 7), (4, 7), (3, 7)],
+        "obj_id bigint, cell bigint",
+    )
+    got = {(r.oa, r.ob) for r in _covisit_shared_pairs(memb, 1).collect()}
+    assert got == {(3, 4)}
+
+
 def test_i62_i62b_arrow_engine_bit_identical_to_hof(spark):
     """The Arrow fan-contraction engine vs the Catalyst clip-chain
     engine for BOTH concave overlay joins: identical row sets with

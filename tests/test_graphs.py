@@ -424,9 +424,18 @@ def test_n18_round_hint_free_and_lazy_chain(spark):
     )
     assert "broadcast" not in plan.lower()
 
-    lab = _n18_labels(e)
-    final_plan = lab._jdf.queryExecution().analyzed().toString()
-    assert final_plan.lower().count("mode(lbl") == 0  # checkpointed: no lineage
+    def aggregates(df):
+        """Aggregate nodes in the analyzed JVM plan tree of ``df``."""
+        todo, n = [df._jdf.queryExecution().analyzed()], 0
+        while todo:
+            node = todo.pop()
+            n += node.nodeName() == "Aggregate"
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+        return n
+
+    # checkpointed: no lineage
+    assert aggregates(_n18_labels(e)) == 0
     # the chain is linear: build labels WITHOUT the final checkpoint by
     # replaying the loop shape and counting aggregates
     chained = labels
@@ -436,8 +445,7 @@ def test_n18_round_hint_free_and_lazy_chain(spark):
             .groupBy("node")
             .agg(__import__("pyspark").sql.functions.mode("lbl", True).alias("lbl"))
         )
-    chain_plan = chained._jdf.queryExecution().analyzed().toString()
-    assert chain_plan.lower().count("mode(lbl") == _N18_ITERS
+    assert aggregates(chained) == _N18_ITERS
 
 
 def test_weighted_sssp_matches_dijkstra(spark):
